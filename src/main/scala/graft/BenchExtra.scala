@@ -15,6 +15,10 @@ import graft.functions.GraftFunctions._
   * measurement surface; this main exists so OPTIMIZATION_r06.md numbers are
   * reproducible. Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.BenchExtra [plansDir]"
+  * SPARK_GRAFT_EXTRA_SECTIONS picks the sections (default
+  * q19b,q17,q29,q26,q35,q20,misc). The q14 shape A/B is not in the default:
+  * run it with SPARK_GRAFT_EXTRA_SECTIONS=q14ab, once per order of
+  * SPARK_GRAFT_Q14_ORDER (e.g. plain,fanout,barrier and barrier,fanout,plain).
   */
 object BenchExtra {
 
@@ -202,32 +206,6 @@ object BenchExtra {
       timeNoop("q20.full")(SparkEntry.queries("q20_cosine_topk")(spark, sfDir))
       timeNoop("q20c.full")(SparkEntry.queries("q20c_ann_multiband")(spark, sfDir))
       dumpPlan("q20_cosine_topk", SparkEntry.queries("q20_cosine_topk")(spark, sfDir))
-    }
-
-    // ---- starRound hub-skew A/B (VERDICT r5 #2): window-min form vs
-    // groupBy(min)+join form on (a) a planted hub — one node with `hubDeg`
-    // neighbours — and (b) a uniform random graph of the same edge count.
-    if (sections("cchub")) {
-      import spark.implicits._
-      val hubDeg = sys.env.getOrElse("SPARK_GRAFT_HUB_DEG", "1000000").toInt
-      def pad(i: org.apache.spark.sql.Column) = lpad(i.cast("string"), 9, "0")
-      val hub = spark.range(1, hubDeg.toLong + 1)
-        .select(lit("000000000").as("src"), pad(col("id")).as("dst"))
-        .repartition(cpus.toInt).localCheckpoint(true)
-      val uniform = spark.range(0, hubDeg.toLong)
-        .select(pad(pmod(xxhash64(col("id")), lit(hubDeg))).as("src"),
-          pad(pmod(xxhash64(col("id") + lit(hubDeg)), lit(hubDeg))).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .repartition(cpus.toInt).localCheckpoint(true)
-      timeNoop("cchub.hub_window", reps = 3)(
-        graft.resolve.ConnectedComponents.starRound(hub))
-      timeNoop("cchub.hub_agg", reps = 3)(
-        graft.resolve.ConnectedComponents.starRoundAgg(hub))
-      timeNoop("cchub.uniform_window", reps = 3)(
-        graft.resolve.ConnectedComponents.starRound(uniform))
-      timeNoop("cchub.uniform_agg", reps = 3)(
-        graft.resolve.ConnectedComponents.starRoundAgg(uniform))
-      hub.unpersist(); uniform.unpersist()
     }
 
     // ---- bulk formatted-plan dump for the plans/r06 audit trail:

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * for `local-cluster[N, cores, mem]`, Spark's real-multi-executor local
   * mode (separate executor JVMs, netty shuffle), which is the closest this
   * sandbox gets to the BASELINE.json criterion "N and 4N EXECUTORS":
-  * thread-scaling inside one JVM (graft.ScalingBench) under-states true
-  * cluster scaling because all threads share one heap, allocator and GC.
+  * thread-scaling inside one JVM under-states true cluster scaling
+  * because all threads share one heap, allocator and GC.
   *
   * Usage (interleave pairs in a driving script, >= 3 per config):
   *   SPARK_HOME=/opt/spark spark-submit \

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.blocking.Blocking
+import graft.blocking.{Blocking, BlockingResult, RuleTierStats}
 import graft.refine.DistinguishingTokens
 import graft.resolve.{ConnectedComponents, ExactCascade}
 import graft.runtime.Checkpoints
@@ -44,7 +44,6 @@ object Pipeline {
       maxBlockRows: Int = 200,
       maxSaltFactor: Int = 8,
       snmWindow: Int = 20,
-      useSecondPass: Boolean = true,
       /** trie-fallback cascade stage (deepest-unique token suffix) in LINK
         * mode. Self-dedup mode ignores it: each record is its own deepest
         * suffix match there, so the stage can only re-find exact dups that
@@ -71,7 +70,7 @@ object Pipeline {
         * pairs stage was resumed from checkpoint — then the stats live in
         * the checkpoint's `_info_pairs.json` sidecar)
         */
-      tierStats: Seq[blocking.RuleTierStats] = Nil,
+      tierStats: Seq[RuleTierStats] = Nil,
       nBlockingRules: Int = 0) {
     /** Pairs that took the SNM salvage path (match_key >= #rules) — the
       * observable volume of lossy ultra-hot handling in this run. Counting
@@ -90,7 +89,7 @@ object Pipeline {
       scored: DataFrame,
       bestMatches: DataFrame,
       merged: DataFrame,
-      tierStats: Seq[blocking.RuleTierStats] = Nil,
+      tierStats: Seq[RuleTierStats] = Nil,
       nBlockingRules: Int = 0) {
     def salvagePairCount: Long = pairs.filter(col("match_key") >= nBlockingRules).count()
   }
@@ -107,7 +106,7 @@ object Pipeline {
       .map("%02x".format(_)).mkString
   }
 
-  private def tierStatsJson(stats: Seq[blocking.RuleTierStats]): String =
+  private def tierStatsJson(stats: Seq[RuleTierStats]): String =
     stats.map(t =>
       s"""{"rule":${t.rule},"n_salt_keys":${t.nSaltKeys},"n_ultra_keys":${t.nUltraKeys},""" +
         s""""n_one_sided_hot_keys":${t.nOneSidedHotKeys}}""")
@@ -131,92 +130,112 @@ object Pipeline {
     pairs.join(lCarry, Seq("conv_id_l")).join(rCarry, Seq("conv_id_r"))
   }
 
-  /** Score narrow pairs against their signature features (the isolated
-    * scoring surface used by the benchmark's throughput metric).
+  /** Score narrow pairs against their signature features (the pipelines'
+    * score stage, and the isolated scoring surface the benchmark's
+    * throughput metric times).
     */
   def scorePairs(lSigs: DataFrame, rSigs: DataFrame, pairs: DataFrame, prior: Double): DataFrame =
     Scoring.scoreDefault(attachScoreCols(lSigs, rSigs, pairs), prior)
+
+  /** The stage spine `run` and `runLink` share. Stage boundaries truncate
+    * lineage: parquet commit when resumable checkpointing is on (keyed by a
+    * config fingerprint so a config change recomputes instead of serving
+    * stale stages), LAZY localCheckpoint otherwise — each stage materialises
+    * exactly once at its first action and is reused after, but without
+    * eager per-stage driver barriers (round-1 bench showed the serial
+    * barriers dominating local wall). Reference analogue: per-stage
+    * temp-table materialisation, sql_pipeline/runner.py:471-491.
+    */
+  private final class Stages(spark: SparkSession, cfg: Config) {
+    private val ckpt = cfg.checkpointDir.map(new Checkpoints(spark, _))
+    private val fp = configFingerprint(cfg)
+    val rules = Blocking.defaultRules(Signatures.Bands)
+    val skew = Blocking.SkewConfig(cfg.maxBlockRows, cfg.maxSaltFactor, cfg.snmWindow,
+      snmSortCol = Some("sig_text"))
+
+    def apply(name: String)(compute: => DataFrame): DataFrame =
+      ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
+
+    /** Signatures + TF attach, persisted. s0 is materialised once inside
+      * the stage: tokenFrequencies, attachTf's per-token explode and the
+      * final feature join are three more instances of the signatures
+      * subplan — exchange reuse shares the conversation shuffle but each
+      * instance recomputed the heavy post-aggregate projection (measured as
+      * the dominant pipeline stage at 30k convs). The TF table comes from
+      * `tfFrom` when given, else from these signatures.
+      */
+    def signatures(name: String, turns: DataFrame, tfFrom: Option[DataFrame] = None): DataFrame =
+      apply(name) {
+        val s0 = Signatures.signatures(turns).localCheckpoint(false)
+        Signatures.attachTf(s0, Signatures.tokenFrequencies(tfFrom.getOrElse(s0)))
+          .withColumn("block_key", col("bk_role_len"))
+      }.persist()
+
+    /** Stages `<prefix>pairs`, `<prefix>scored`, `<prefix>refined`. The
+      * pairs boundary stays NARROW (ids + match_key): materialising
+      * carry-fattened pairs (turn texts + TF maps per side) at a stage
+      * boundary measured ~100 s at 250k convs — the features are attached
+      * inside the scoring stage instead, which emits a narrow result.
+      */
+    def blockScoreRefine(prefix: String, lSigs: DataFrame, rSigs: DataFrame,
+        refinedCols: Seq[String])(block: => BlockingResult): Matched = {
+      var tierStats: Seq[RuleTierStats] = Nil
+      val pairs = apply(prefix + "pairs") {
+        val res = block
+        tierStats = res.tierStats
+        res.pairs
+      }
+      // skew observability survives in the checkpoint dir next to the stage
+      if (tierStats.nonEmpty) ckpt.foreach(_.writeInfo(prefix + "pairs", tierStatsJson(tierStats)))
+      val scored = apply(prefix + "scored") {
+        scorePairs(lSigs, rSigs, pairs, cfg.prior)
+          .filter(col("match_weight") > cfg.predictThreshold)
+          .select("conv_id_l", "conv_id_r", "match_key", "match_weight",
+            "match_probability", "sig_text_l", "sig_text_r")
+      }
+      val refined = apply(prefix + "refined") {
+        DistinguishingTokens.improve(scored,
+          DistinguishingTokens.Params(
+            matchWeightThreshold = cfg.improveThreshold, topNMatches = cfg.topN))
+          .select(refinedCols.map(col): _*)
+      }
+      Matched(pairs, scored, refined, tierStats)
+    }
+  }
+
+  private final case class Matched(
+      pairs: DataFrame, scored: DataFrame, refined: DataFrame, tierStats: Seq[RuleTierStats])
 
   def run(spark: SparkSession, turnsIn: DataFrame, cfg: Config = Config()): Result = {
     // fail fast with ALL schema problems aggregated (reference:
     // validation.py enforced before the deterministic pass)
     val turns = runtime.SchemaValidation.validateOrThrow(
       turnsIn, runtime.SchemaValidation.turnsSchema, "turns")
-    val ckpt = cfg.checkpointDir.map(new Checkpoints(spark, _))
-    // Stage boundaries truncate lineage: parquet commit when resumable
-    // checkpointing is on (keyed by a config fingerprint so a config change
-    // recomputes instead of serving stale stages), LAZY localCheckpoint
-    // otherwise — each stage materialises exactly once at its first action
-    // and is reused after, but without eager per-stage driver barriers
-    // (round-1 bench showed the serial barriers dominating local wall).
-    // Reference analogue: per-stage temp-table materialisation,
-    // sql_pipeline/runner.py:471-491.
-    val fp = configFingerprint(cfg)
-    def staged(name: String)(compute: => DataFrame): DataFrame =
-      ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
+    val stage = new Stages(spark, cfg)
 
-    // 1. signatures (+ TF attach). s0 is materialised once inside the
-    // stage: tokenFrequencies, attachTf's per-token explode and the final
-    // feature join are three more instances of the signatures subplan —
-    // exchange reuse shares the conversation shuffle but each instance
-    // recomputed the heavy post-aggregate projection (measured as the
-    // dominant pipeline stage at 30k convs).
-    val sigs = staged("signatures") {
-      val s0 = Signatures.signatures(turns).localCheckpoint(false)
-      val tf = Signatures.tokenFrequencies(s0)
-      Signatures.attachTf(s0, tf)
-        .withColumn("block_key", col("bk_role_len"))
-    }.persist()
+    // 1. signatures (+ TF attach)
+    val sigs = stage.signatures("signatures", turns)
 
     // 2. deterministic cascade (self-dedup: canonical side = all records;
     // exact duplicates collapse to the min id immediately). Self mode uses
     // the proven one-shuffle collapse of the full cascade — identical
     // output (ExactCascade.selfExactLinks doc + CascadeSpec equivalence
     // test), ~10 fewer serial stages (VERDICT r3 #4).
-    val cascade = staged("cascade") {
+    val cascade = stage("cascade") {
       ExactCascade.selfExactLinks(
         sigs.select(col("conv_id"), col("sig_text"), col("block_key")))
     }
 
-    // 3. blocking on everything (cascade edges merge in at the end).
-    // The pairs boundary stays NARROW (ids + match_key): materialising
-    // carry-fattened pairs (turn texts + TF maps per side) at a stage
-    // boundary measured ~100 s at 250k convs — the features are attached
-    // inside the scoring stage instead, which emits a narrow result.
-    val rules = Blocking.defaultRules(Signatures.Bands)
-    var tierStats: Seq[blocking.RuleTierStats] = Nil
-    val pairs = staged("pairs") {
-      val res = Blocking.candidatePairsSelfWithStats(
-        sigs, "conv_id", rules,
-        Blocking.SkewConfig(cfg.maxBlockRows, cfg.maxSaltFactor, cfg.snmWindow,
-          snmSortCol = Some("sig_text")))
-      tierStats = res.tierStats
-      res.pairs
-    }
-    // skew observability survives in the checkpoint dir next to the stage
-    if (tierStats.nonEmpty) ckpt.foreach(_.writeInfo("pairs", tierStatsJson(tierStats)))
-
-    // 4. score (carry features joined in from the persisted signatures)
-    val scored = staged("scored") {
-      Scoring.scoreDefault(attachScoreCols(sigs, sigs, pairs), cfg.prior)
-        .filter(col("match_weight") > cfg.predictThreshold)
-        .select("conv_id_l", "conv_id_r", "match_key", "match_weight",
-          "match_probability", "sig_text_l", "sig_text_r")
-    }
-
-    // 5. second pass
-    val refined = staged("refined") {
-      if (!cfg.useSecondPass) scored
-      else DistinguishingTokens.improve(scored,
-        DistinguishingTokens.Params(
-          matchWeightThreshold = cfg.improveThreshold, topNMatches = cfg.topN))
-        .select("conv_id_l", "conv_id_r", "match_weight", "match_weight_original",
-          "mw_adjustment")
+    // 3-5. blocking on everything (cascade edges merge in at the end),
+    // score, second pass
+    val m = stage.blockScoreRefine("", sigs, sigs, Seq("conv_id_l", "conv_id_r",
+        "match_weight", "match_weight_original", "mw_adjustment")) {
+      Blocking.candidatePairsSelfWithStats(sigs, "conv_id", stage.rules, stage.skew)
     }
 
     // 6. edges = confident first-pass pairs + deterministic cascade links
-    val clusters = staged("clusters") {
-      val scoredEdges = scored.filter(col("match_weight") > cfg.edgeThreshold)
+    val clusters = stage("clusters") {
+      val scoredEdges = m.scored.filter(col("match_weight") > cfg.edgeThreshold)
         .select(col("conv_id_l"), col("conv_id_r"))
       val cascadeEdges = cascade.select(
         col("conv_id").as("conv_id_l"), col("resolved_canonical_id").as("conv_id_r"))
@@ -230,7 +249,7 @@ object Pipeline {
         driverFinishMaxEdges = cfg.ccDriverFinishMaxEdges)
     }
 
-    Result(sigs, pairs, scored, refined, clusters, tierStats, rules.length)
+    Result(sigs, m.pairs, m.scored, m.refined, clusters, m.tierStats, stage.rules.length)
   }
 
   /** Link-mode pipeline: match each messy conversation to its best
@@ -257,71 +276,37 @@ object Pipeline {
       messyTurnsIn, runtime.SchemaValidation.turnsSchema, "messy turns")
     val canonicalTurns = runtime.SchemaValidation.validateOrThrow(
       canonicalTurnsIn, runtime.SchemaValidation.turnsSchema, "canonical turns")
-    val ckpt = cfg.checkpointDir.map(new Checkpoints(spark, _))
-    val fp = configFingerprint(cfg)
-    def staged(name: String)(compute: => DataFrame): DataFrame =
-      ckpt.map(_.stage(name, fp)(compute)).getOrElse(compute.localCheckpoint(false))
+    val stage = new Stages(spark, cfg)
 
     // 1. signatures; one TF table (canonical corpus) applied to both sides
     // so a token's rarity means the same thing on each side of a pair.
-    val canonSigs = staged("link_canon_sigs") {
-      // s0 materialised once — see run()'s signatures stage note
-      val s0 = Signatures.signatures(canonicalTurns).localCheckpoint(false)
-      Signatures.attachTf(s0, Signatures.tokenFrequencies(s0))
-        .withColumn("block_key", col("bk_role_len"))
-    }.persist()
-    val messySigs = staged("link_messy_sigs") {
-      val s0 = Signatures.signatures(messyTurns).localCheckpoint(false)
-      // TF from the already-materialised canonical signatures (tokens col)
-      Signatures.attachTf(s0, Signatures.tokenFrequencies(canonSigs))
-        .withColumn("block_key", col("bk_role_len"))
-    }.persist()
+    val canonSigs = stage.signatures("link_canon_sigs", canonicalTurns)
+    val messySigs = stage.signatures("link_messy_sigs", messyTurns, tfFrom = Some(canonSigs))
 
     // 2. deterministic cascade
-    val det = staged("link_cascade") {
+    val det = stage("link_cascade") {
       ExactCascade.run(
         messySigs.select(col("conv_id"), col("sig_text"), col("block_key")),
         canonSigs.select(col("conv_id"), col("sig_text"), col("block_key")),
         useSuffixStage = cfg.useSuffixStage)
     }
 
-    // 3. blocking on the carry-forward (unmatched messy records only);
-    // narrow pairs boundary, features joined at scoring time (see run()).
-    val rules = Blocking.defaultRules(Signatures.Bands)
-    var tierStats: Seq[blocking.RuleTierStats] = Nil
-    val pairs = staged("link_pairs") {
+    // 3-4. blocking on the carry-forward (unmatched messy records only),
+    // score, second pass
+    val m = stage.blockScoreRefine("link_", canonSigs, messySigs,
+        Seq("conv_id_l", "conv_id_r", "match_weight")) {
       val remaining = messySigs.join(det.select("conv_id"), Seq("conv_id"), "left_anti")
-      val res = Blocking.candidatePairsLinkWithStats(
-        canonSigs, remaining, "conv_id", rules,
-        Blocking.SkewConfig(cfg.maxBlockRows, cfg.maxSaltFactor, cfg.snmWindow,
-          snmSortCol = Some("sig_text")))
-      tierStats = res.tierStats
-      res.pairs
-    }
-    if (tierStats.nonEmpty) ckpt.foreach(_.writeInfo("link_pairs", tierStatsJson(tierStats)))
-
-    // 4. score + second pass
-    val scored = staged("link_scored") {
-      Scoring.scoreDefault(attachScoreCols(canonSigs, messySigs, pairs), cfg.prior)
-        .filter(col("match_weight") > cfg.predictThreshold)
-        .select("conv_id_l", "conv_id_r", "match_key", "match_weight",
-          "match_probability", "sig_text_l", "sig_text_r")
-    }
-    val refined = staged("link_refined") {
-      if (!cfg.useSecondPass) scored
-      else DistinguishingTokens.improve(scored,
-        DistinguishingTokens.Params(
-          matchWeightThreshold = cfg.improveThreshold, topNMatches = cfg.topN))
-        .select("conv_id_l", "conv_id_r", "match_weight")
+      Blocking.candidatePairsLinkWithStats(canonSigs, remaining, "conv_id", stage.rules, stage.skew)
     }
 
     // 5-6. best match + merge
-    val best = staged("link_best") {
-      graft.evaluate.Evaluate.bestMatches(refined)
+    val best = stage("link_best") {
+      graft.evaluate.Evaluate.bestMatches(m.refined)
     }
-    val merged = staged("link_merged") {
+    val merged = stage("link_merged") {
       graft.evaluate.Evaluate.mergeMatches(det, best)
     }
-    LinkResult(messySigs, canonSigs, det, pairs, scored, best, merged, tierStats, rules.length)
+    LinkResult(messySigs, canonSigs, det, m.pairs, m.scored, best, merged, m.tierStats,
+      stage.rules.length)
   }
 }

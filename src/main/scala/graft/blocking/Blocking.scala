@@ -189,14 +189,6 @@ object Blocking {
       .distinct()
   }
 
-  /** Size-based join-side hint (north_star: "skew-aware broadcast-or-sort-
-    * merge block join"): broadcast the smaller side when it fits, else let
-    * Catalyst/AQE pick sort-merge. `rowsHint` should come from a cheap
-    * count on an already-materialised stage boundary.
-    */
-  def broadcastIfSmall(df: DataFrame, rowsHint: Long, maxBroadcastRows: Long = 1000000L): DataFrame =
-    if (rowsHint >= 0 && rowsHint <= maxBroadcastRows) broadcast(df) else df
-
   private def candidatePairs(
       l: DataFrame,
       r: DataFrame,

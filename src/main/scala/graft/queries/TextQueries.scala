@@ -92,7 +92,7 @@ object TextQueries {
         // window (VERDICT r4 #4): sum().over(Window.partitionBy()) funnels
         // the whole vocab through one WindowExec partition; the broadcast
         // nested-loop join keeps the plan parallel (same pattern as the
-        // pipeline TF total, PLANS.md).
+        // pipeline TF total in Signatures.tokenFrequencies).
         val total = counted.agg(sum(col("cnt")).as("total"))
         counted
           .crossJoin(broadcast(total))

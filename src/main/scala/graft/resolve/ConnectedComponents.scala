@@ -162,12 +162,10 @@ object ConnectedComponents {
     * partitionBy(u) — never collect_set (a hub's neighbour array would
     * have to fit one executor); the window sort spills, and hub degree is
     * bounded upstream by the blocking caps that generate these edges.
-    * For UNBOUNDED edge inputs (run/assignAll as a public component) the
-    * hub-skew question was settled by a planted-hub A/B in round 6: the
-    * window form beat the groupBy(min)+join alternative up to 4M-degree
-    * hubs (see starRoundAgg's doc for numbers); callers whose hubs exceed
-    * a single task's spillable sort can swap in starRoundAgg, which is
-    * equivalence-tested against this form.
+    * Why a window and not groupBy(min) + join-back: a planted-hub A/B
+    * measured the window form faster everywhere (1M-degree hub 6.7 vs 7.0 s,
+    * 4M hub 24.8 vs 30.9 s, 1M/4M uniform 2.2/4.4 vs 11.1/8.6 s); the join
+    * form's extra exchange and two sorts outweigh the hub's one spilling sort.
     * Large-star's output is NOT deduplicated: duplicates cannot change the
     * small-star minima and the single distinct below canonicalises the
     * round's output — one fewer shuffle for a bounded (≤2x) transient
@@ -198,57 +196,6 @@ object ConnectedComponents {
       // single-pass emission: the v<=u edge from every row, and the (u,m)
       // self-link once per node (from its minimal-neighbour row — v==mv
       // may fire on duplicate rows; the distinct cleans those up)
-      .select(explode(filter(array(
-        struct(least(col("v"), col("m")).as("s"), greatest(col("v"), col("m")).as("d"),
-          (col("v") <= col("u")).as("keep")),
-        struct(least(col("u"), col("m")).as("s"), greatest(col("u"), col("m")).as("d"),
-          (col("v") === col("mv")).as("keep"))),
-        x => x.getField("keep"))).as("edge"))
-      .select(col("edge.s").as("src"), col("edge.d").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-  }
-
-  /** starRound with per-node neighbourhood minima computed via
-    * groupBy(min) + join-back instead of a window min over
-    * partitionBy(u). Emission logic is expression-identical, so the
-    * output edge multiset is the same (ConnectedComponentsSpec
-    * equivalence test).
-    *
-    * Settles VERDICT r5 #2 (hub-skew question) by measurement, not
-    * speculation: this form's min is map-side partially aggregated (a
-    * hub's minima collapse per map task before the shuffle) and the join
-    * back is AQE-skew-splittable, where the window form sorts a hub's
-    * whole neighbourhood in ONE task. But the planted-hub A/B
-    * (BenchExtra `cchub`, OPTIMIZATION_r06.md) measured the WINDOW form
-    * faster on BOTH shapes at both sizes tried — 1M-degree hub 6.7 s vs
-    * 7.0 s, 4M-degree hub 24.8 s vs 30.9 s, 1M/4M uniform 2.2/4.4 s vs
-    * 11.1/8.6 s — because the join-back costs an extra exchange + two
-    * sort-merge sorts that outweigh the hub partition's single-task sort,
-    * which spills gracefully rather than OOMing. The loop therefore keeps
-    * the window form; this variant stays as the measured, equivalence-
-    * tested alternative for workloads whose hub neighbourhoods exceed
-    * what one task's spillable sort should carry.
-    */
-  private[graft] def starRoundAgg(e: DataFrame): DataFrame = {
-    def bothDirections(edges: DataFrame): DataFrame =
-      edges.select(explode(array(
-        struct(col("src").as("u"), col("dst").as("v")),
-        struct(col("dst").as("u"), col("src").as("v")))).as("p"))
-        .select(col("p.u").as("u"), col("p.v").as("v"))
-    // ---- large-star: connect every v in N(u), v > u, to m = min(N(u) ∪ {u})
-    val bdE = bothDirections(e)
-    val minE = bdE.groupBy(col("u")).agg(min(col("v")).as("mv"))
-    val large = bdE.join(minE, Seq("u"))
-      .withColumn("m", least(col("mv"), col("u")))
-      .filter(col("v") > col("u"))
-      .select(least(col("v"), col("m")).as("src"), greatest(col("v"), col("m")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // ---- small-star: connect every v in N(u), v <= u, plus u itself, to m
-    val bdL = bothDirections(large)
-    val minL = bdL.groupBy(col("u")).agg(min(col("v")).as("mv"))
-    bdL.join(minL, Seq("u"))
-      .withColumn("m", least(col("mv"), col("u")))
       .select(explode(filter(array(
         struct(least(col("v"), col("m")).as("s"), greatest(col("v"), col("m")).as("d"),
           (col("v") <= col("u")).as("keep")),

@@ -33,24 +33,20 @@ final class Checkpoints(spark: SparkSession, dir: String) {
 
   private def manifestPath(stage: String) = new Path(s"$dir/_manifest_$stage.json")
 
-  private def readManifest(stage: String): Option[String] = {
-    val p = manifestPath(stage)
+  private def infoPath(stage: String) = new Path(s"$dir/_info_$stage.json")
+
+  /** A small UTF-8 file's contents, or None when it does not exist. */
+  private def readText(p: Path): Option[String] =
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
     }
-  }
 
-  private def writeManifest(stage: String, json: String): Unit = {
-    val out = fs.create(manifestPath(stage), true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
+  private def writeText(p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
@@ -58,7 +54,7 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     * committed by older layouts with no manifest).
     */
   def committedFingerprint(stage: String): Option[String] =
-    readManifest(stage).map { json =>
+    readText(manifestPath(stage)).map { json =>
       "\"fingerprint\":\"([^\"]*)\"".r.findFirstMatchIn(json)
         .map(_.group(1)).getOrElse("")
     }
@@ -88,7 +84,7 @@ final class Checkpoints(spark: SparkSession, dir: String) {
       val rows = committed.count()
       val parts = committed.rdd.getNumPartitions
       val ms = (System.nanoTime() - t0) / 1000000
-      writeManifest(name,
+      writeText(manifestPath(name),
         s"""{"stage":"$name","rows":$rows,"partitions":$parts,"wall_ms":$ms,""" +
           s""""path":"$path","fingerprint":"$fingerprint"}""")
       committed
@@ -99,35 +95,9 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     * stage's skew-tier stats) — written as <dir>/_info_<stage>.json so run
     * metrics survive in the checkpoint dir alongside the manifest.
     */
-  def writeInfo(stage: String, json: String): Unit = {
-    val out = fs.create(new Path(s"$dir/_info_$stage.json"), true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def writeInfo(stage: String, json: String): Unit = writeText(infoPath(stage), json)
 
-  def readInfo(stage: String): Option[String] = {
-    val p = new Path(s"$dir/_info_$stage.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-  }
-
-  /** Stages committed so far (manifest files present), by modification time. */
-  def committedStages(): Seq[String] = {
-    val st = fs.listStatus(new Path(dir))
-    st.filter(s => s.getPath.getName.startsWith("_manifest_"))
-      .sortBy(_.getModificationTime)
-      .map(_.getPath.getName.stripPrefix("_manifest_").stripSuffix(".json"))
-      .toSeq
-  }
+  def readInfo(stage: String): Option[String] = readText(infoPath(stage))
 }
 
 /** Per-partition lineage + per-stage metrics via SparkListener (north_rule:

@@ -106,6 +106,38 @@ class LinkPipelineSpec extends AnyFunSuite {
     assert(rows.head === ("c_a", "exact_match"))
   }
 
+  test("runLink with a checkpoint dir commits every link stage and resumes from them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_link_ckpt").toString
+    // c_b2 repeats c_b, so their blocking keys occur twice on the canonical
+    // side; with a one-row block cap those keys are over the cap (salted
+    // where the near-dup m_fuzzy shares them), so the pairs stage has tier
+    // stats to record in its sidecar
+    val canonical = (turnsOf("c_a", convA) ++ turnsOf("c_b", convB) ++
+      turnsOf("c_b2", convB) ++ turnsOf("c_c", convC)).toDF("conv_id", "turn_idx", "role", "text")
+    val fuzzyB = convB.updated(3, "tool" -> convB(3)._2)
+    val messy = (turnsOf("m_exact", convA) ++ turnsOf("m_fuzzy", fuzzyB) ++
+      turnsOf("m_unique", convD)).toDF("conv_id", "turn_idx", "role", "text")
+    val cfg = Pipeline.Config(maxBlockRows = 1, checkpointDir = Some(dir))
+    def mergedRows(r: Pipeline.LinkResult) =
+      r.merged.orderBy("conv_id_r", "conv_id_l").collect().toSeq
+
+    val r1 = Pipeline.runLink(spark, messy, canonical, cfg)
+    val rows1 = mergedRows(r1)
+    assert(rows1.map(r => r.getAs[String]("conv_id_r") -> r.getAs[String]("conv_id_l"))
+      .contains("m_exact" -> "c_a"))
+    val ck = new graft.runtime.Checkpoints(spark, dir)
+    val stages = Seq("link_canon_sigs", "link_messy_sigs", "link_cascade", "link_pairs",
+      "link_scored", "link_refined", "link_best", "link_merged")
+    assert(stages.filterNot(ck.isCommitted) === Nil)
+    assert(r1.tierStats.nonEmpty, "precondition: some blocking key must be over the cap")
+    assert(ck.readInfo("link_pairs").exists(_.contains("n_salt_keys")))
+
+    val r2 = Pipeline.runLink(spark, messy, canonical, cfg)
+    assert(mergedRows(r2) === rows1)
+    // the pairs stage was read back, not recomputed: no fresh tier stats
+    assert(r2.tierStats.isEmpty)
+  }
+
   test("runLink rejects malformed input with aggregated schema errors") {
     val bad = Seq(("x", "oops")).toDF("conv_id", "text") // no turn_idx/role
     val canonical = turnsOf("c_a", convA).toDF("conv_id", "turn_idx", "role", "text")
