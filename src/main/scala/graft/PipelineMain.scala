@@ -17,7 +17,7 @@ import graft.runtime.StageMetricsListener
   *   (benchmark mode); otherwise reads a parquet turn table with the
   *   (conv_id, turn_idx, role, text, tool, ts) contract.
   * - every stage commits to <checkpointDir>; a rerun after a crash resumes
-  *   from the last committed stage (manifest.jsonl).
+  *   from the committed stages (one _manifest_<stage>.json per stage).
   * - task-level metrics + per-partition record counts land in
   *   <outDir>/stage_metrics.jsonl; cluster assignments in <outDir>/clusters.
   */

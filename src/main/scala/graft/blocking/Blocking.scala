@@ -107,56 +107,38 @@ object Blocking {
     * adjacently; defaults to the id, which is deterministic but blind).
     */
   final case class SkewConfig(
-      maxBlockRows: Int = 1000,
-      maxSaltFactor: Int = 8,
-      snmWindow: Int = 20,
+      maxBlockRows: Int,
+      maxSaltFactor: Int,
+      snmWindow: Int,
       snmSortCol: Option[String] = None)
 
-  /** Generate candidate pairs for self-dedup: `id_l < id_r`, one row per
-    * pair with the first matching rule's index as `match_key` (ultra-hot
-    * SNM salvage pairs get rules.length + ruleIndex).
+  /** Self-dedup pair generation: `id_l < id_r`, one narrow (id_l, id_r,
+    * match_key) row per pair with the first matching rule's index as
+    * `match_key` (ultra-hot SNM salvage pairs get rules.length +
+    * ruleIndex), plus per-rule skew-tier stats.
     */
-  def candidatePairsSelf(
-      sigs: DataFrame,
-      idCol: String,
-      rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): DataFrame =
-    candidatePairsSelfWithStats(sigs, idCol, rules, skew, carryCols).pairs
-
-  /** Self-dedup pair generation, also returning per-rule skew-tier stats. */
   def candidatePairsSelfWithStats(
       sigs: DataFrame,
       idCol: String,
       rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): BlockingResult = {
+      skew: SkewConfig): BlockingResult = {
     val l = sigs.toDF(sigs.columns.map(_ + "_l"): _*)
     val r = sigs.toDF(sigs.columns.map(_ + "_r"): _*)
-    candidatePairs(l, r, idCol, rules, skew, selfDedup = true, carryCols)
+    candidatePairs(l, r, idCol, rules, skew, selfDedup = true)
   }
 
-  /** Link-mode (messy x canonical) pair generation. */
-  def candidatePairsLink(
-      left: DataFrame,
-      right: DataFrame,
-      idCol: String,
-      rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): DataFrame =
-    candidatePairsLinkWithStats(left, right, idCol, rules, skew, carryCols).pairs
-
-  /** Link-mode pair generation, also returning per-rule skew-tier stats. */
+  /** Link-mode (left x right) pair generation, also returning per-rule
+    * skew-tier stats.
+    */
   def candidatePairsLinkWithStats(
       left: DataFrame,
       right: DataFrame,
       idCol: String,
       rules: Seq[BlockingRule],
-      skew: SkewConfig = SkewConfig(),
-      carryCols: Seq[String] = Nil): BlockingResult = {
+      skew: SkewConfig): BlockingResult = {
     val l = left.toDF(left.columns.map(_ + "_l"): _*)
     val r = right.toDF(right.columns.map(_ + "_r"): _*)
-    candidatePairs(l, r, idCol, rules, skew, selfDedup = false, carryCols)
+    candidatePairs(l, r, idCol, rules, skew, selfDedup = false)
   }
 
   /** Sorted-neighborhood pairing inside a (possibly hot) block: sort block
@@ -195,8 +177,7 @@ object Blocking {
       idCol: String,
       rules: Seq[BlockingRule],
       skew: SkewConfig,
-      selfDedup: Boolean,
-      carryCols: Seq[String]): BlockingResult = {
+      selfDedup: Boolean): BlockingResult = {
     val cap = skew.maxBlockRows
     val ultraCap = cap.toLong * skew.maxSaltFactor
 
@@ -210,13 +191,9 @@ object Blocking {
       df.withColumn(s"__bk_$i", rule.rightKey.cast("string"))
     }
 
-    val outCols =
-      Seq(col(s"${idCol}_l"), col(s"${idCol}_r"), col("match_key")) ++
-        carryCols.flatMap(c => Seq(col(c + "_l"), col(c + "_r")))
-
-    // NARROW frames for the joins: id + rule keys only. The heavy carry
-    // columns (turn texts, TF hist maps, ...) are attached ONCE after the
-    // union with two id-joins — shuffling them through every rule join
+    // NARROW frames for the joins: id + rule keys only. Feature columns
+    // (turn texts, TF hist maps, ...) are attached to the pairs later by
+    // Pipeline.attachScoreCols — shuffling them through every rule join
     // multiplied the blocking stage's bytes by the carry width (measured
     // 45 s -> the dominant pipeline stage at 30k convs).
     val lNarrow = lKeyed.select(
@@ -415,20 +392,7 @@ object Blocking {
           mainPairs.unionByName(dedup.select(idPair: _*))
       }
 
-    // attach carry columns once, post-union (one row per id on each side)
-    val out =
-      if (carryCols.isEmpty) allPairs.select(outCols: _*)
-      else {
-        val lCarry = lKeyed.select(
-          (col(s"${idCol}_l") +: carryCols.map(c => col(c + "_l"))): _*)
-        val rCarry = rKeyed.select(
-          (col(s"${idCol}_r") +: carryCols.map(c => col(c + "_r"))): _*)
-        allPairs
-          .join(lCarry, Seq(s"${idCol}_l"))
-          .join(rCarry, Seq(s"${idCol}_r"))
-          .select(outCols: _*)
-      }
-    BlockingResult(out, statsOut)
+    BlockingResult(allPairs.select(idPair: _*), statsOut)
   }
 
   /** Sorted-neighborhood pairs for rows whose rule-key is ultra-hot:

@@ -34,15 +34,17 @@ import graft.functions.GraftFunctions._
   */
 object DistinguishingTokens {
 
+  // The reference's fixed multipliers (identify_distinguishing_tokens.py);
+  // the adjustment formula is in the object doc.
+  private val RewardMultiplier = 3.0
+  private val PunishmentMultiplier = 1.5
+  private val BigramRewardMultiplier = 3.0
+  private val BigramPunishmentMultiplier = 1.5
+  private val MissingTokenPenalty = 0.1
+
   final case class Params(
       matchWeightThreshold: Double = -20,
       topNMatches: Int = 5,
-      useBigrams: Boolean = true,
-      rewardMultiplier: Double = 3,
-      punishmentMultiplier: Double = 1.5,
-      bigramRewardMultiplier: Double = 3,
-      bigramPunishmentMultiplier: Double = 1.5,
-      missingTokenPenalty: Double = 0.1,
       /** tokens stripped (up to twice) from each side's tail before the
         * analysis — the reference's remove_common_end_tokens step
         * (identify_distinguishing_tokens.py:58-113; the double list_filter
@@ -223,16 +225,13 @@ object DistinguishingTokens {
     def punishCount(arr: Column): Column = coalesce(size(arr).cast("double"), lit(0.0))
 
     val tokenAdj =
-      rewardSum(col("overlap_tokens"), col("hist_all_tokens_in_block_l")) *
-        params.rewardMultiplier -
-        punishCount(col("tokens_elsewhere")) * params.punishmentMultiplier -
-        size(col("missing_tokens")).cast("double") * params.missingTokenPenalty
+      rewardSum(col("overlap_tokens"), col("hist_all_tokens_in_block_l")) * RewardMultiplier -
+        punishCount(col("tokens_elsewhere")) * PunishmentMultiplier -
+        size(col("missing_tokens")).cast("double") * MissingTokenPenalty
     val bigramAdj =
-      if (!params.useBigrams) lit(0.0)
-      else rewardSum(col("overlap_bigrams_filtered"), col("hist_all_bigrams_in_block_l")) *
-        params.bigramRewardMultiplier -
-        punishCount(col("bigrams_elsewhere_filtered")) *
-          params.bigramPunishmentMultiplier
+      rewardSum(col("overlap_bigrams_filtered"), col("hist_all_bigrams_in_block_l")) *
+        BigramRewardMultiplier -
+        punishCount(col("bigrams_elsewhere_filtered")) * BigramPunishmentMultiplier
 
     windowed
       .withColumn("mw_adjustment", tokenAdj + bigramAdj)

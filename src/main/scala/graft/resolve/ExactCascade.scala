@@ -22,10 +22,10 @@ import graft.functions.GraftFunctions._
   *      re-expressed RELATIONALLY: instead of materialising a per-group
   *      trie blob (a single-node data structure that must fit one
   *      executor and dies exactly at the scale it matters), every token
-  *      suffix up to `maxDepth` becomes a join key; the trie walk "descend
-  *      as deep as possible, succeed iff the subtree holds exactly one id"
-  *      is a max-k window over the suffix join with a min==max
-  *      uniqueness gate (equivalent to n_cand = 1).
+  *      suffix up to `SuffixMaxDepth` tokens becomes a join key; the trie
+  *      walk "descend as deep as possible, succeed iff the subtree holds
+  *      exactly one id" is a max-k window over the suffix join with a
+  *      min==max uniqueness gate (equivalent to n_cand = 1).
   *      Same semantics, but distributed, AQE-planned and skew-handled like
   *      every other join in the engine.
   *
@@ -34,28 +34,29 @@ import graft.functions.GraftFunctions._
   */
 object ExactCascade {
 
+  // a 1-token suffix is a generic sign-off in transcripts, not evidence
+  private val SuffixMinDepth = 2
+  // caps the exploded suffix-key volume at O(rows * SuffixMaxDepth)
+  private val SuffixMaxDepth = 12
+
   /** Deepest-unique token-suffix resolution (the trie fallback, stage 3 —
     * see object doc). For each messy record, find the LARGEST k such that
     * its last-k-token suffix matches >= 1 canonical record in the same
     * block; the record resolves iff that deepest suffix identifies exactly
-    * one canonical id and k >= `minDepth` (a 1-token suffix is a generic
-    * sign-off in transcripts, not evidence). Suffixes are capped at
-    * `maxDepth` tokens so the exploded key volume is O(rows * maxDepth).
+    * one canonical id and k >= `SuffixMinDepth`.
     *
     * @return (id, resolved_canonical_id, depth, match_reason='suffix_trie')
     */
   def resolveWithSuffixes(
       messy: DataFrame,
       canonical: DataFrame,
-      idCol: String = "conv_id",
-      minDepth: Int = 2,
-      maxDepth: Int = 12): DataFrame = {
+      idCol: String = "conv_id"): DataFrame = {
     def suffixKeys(df: DataFrame, outId: String): DataFrame = {
       val toks = split(col("sig_text"), " ")
       df.select(col(idCol).as(outId), col("block_key"), toks.as("__toks"))
         .withColumn("k", explode(
           when(size(col("__toks")) > 0,
-            sequence(lit(1), least(size(col("__toks")), lit(maxDepth))))
+            sequence(lit(1), least(size(col("__toks")), lit(SuffixMaxDepth))))
             .otherwise(array().cast("array<int>"))))
         .select(col(outId), col("block_key"), col("k"),
           array_join(slice(col("__toks"), -col("k"), col("k")), " ").as("suffix"))
@@ -80,7 +81,7 @@ object ExactCascade {
         org.apache.spark.sql.expressions.Window
           .partitionBy(col(idCol)).orderBy(col("k").desc)))
       .filter(col("__rn") === 1 && col("cand_id") === col("__cand_max") &&
-        col("k") >= minDepth)
+        col("k") >= SuffixMinDepth)
     deepest.select(col(idCol), col("cand_id").as("resolved_canonical_id"),
       col("k").cast("long").as("depth"), lit("suffix_trie").as("match_reason"))
   }

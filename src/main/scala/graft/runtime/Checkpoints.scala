@@ -50,8 +50,8 @@ final class Checkpoints(spark: SparkSession, dir: String) {
     finally out.close()
   }
 
-  /** Fingerprint recorded when the stage was committed (empty for stages
-    * committed by older layouts with no manifest).
+  /** Fingerprint recorded in the stage's manifest; None when the manifest
+    * is absent.
     */
   def committedFingerprint(stage: String): Option[String] =
     readText(manifestPath(stage)).map { json =>
@@ -61,20 +61,14 @@ final class Checkpoints(spark: SparkSession, dir: String) {
 
   /** Run (or resume) a stage: reused only when committed AND the recorded
     * fingerprint matches `fingerprint` — a config change invalidates the
-    * checkpoint instead of silently serving stale results.
+    * checkpoint instead of silently serving stale results. An ABSENT
+    * manifest is a mismatch: a stage whose manifest was deleted (or never
+    * written) is unverifiable and is recomputed, not reused under any
+    * config (ADVICE r2).
     */
-  def stage(name: String, fingerprint: String = "")(compute: => DataFrame): DataFrame = {
+  def stage(name: String, fingerprint: String)(compute: => DataFrame): DataFrame = {
     val path = s"$dir/$name"
-    // An ABSENT manifest is a fingerprint MISMATCH when the caller supplies
-    // one: a stage committed by an older layout (or whose manifest was
-    // deleted) is unverifiable and must be recomputed, not silently reused
-    // under any config (ADVICE r2). Legacy no-fingerprint callers still
-    // reuse manifest-less commits.
-    val reusable = isCommitted(name) && (committedFingerprint(name) match {
-      case Some(fp) => fp == fingerprint
-      case None => fingerprint.isEmpty
-    })
-    if (reusable) {
+    if (isCommitted(name) && committedFingerprint(name).contains(fingerprint)) {
       spark.read.parquet(path)
     } else {
       val t0 = System.nanoTime()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.functions.JaroWinkler.jaroWinkler
+import graft.signature.Signatures
 
 /** Fellegi-Sunter pairwise scoring: a cascade of comparison levels per
   * feature yields a Bayes factor; match_weight = log2(prior odds) + sum of
@@ -41,17 +42,6 @@ final case class Comparison(name: String, levels: Seq[ComparisonLevel], elseBf: 
     }
     base.map(_.otherwise(lit(elseBf))).getOrElse(lit(elseBf))
   }
-
-  /** Gamma column (level index, -1 for else) — debugging / evaluation aid. */
-  def gammaColumn: Column = {
-    val base = levels.zipWithIndex.foldLeft[Option[Column]](None) { case (acc, (lv, i)) =>
-      Some(acc match {
-        case None => when(lv.condition, lit(i))
-        case Some(c) => c.when(lv.condition, lit(i))
-      })
-    }
-    base.map(_.otherwise(lit(-1))).getOrElse(lit(-1))
-  }
 }
 
 final case class ScoreModel(priorMatchProbability: Double, comparisons: Seq[Comparison]) {
@@ -61,20 +51,19 @@ final case class ScoreModel(priorMatchProbability: Double, comparisons: Seq[Comp
 
 object Scoring {
 
-  /** Base frequency for TF adjustments (= Signatures.DefaultRelFreq, the
-    * TF-attach miss default): a token at the base frequency gets exactly
-    * the level's nominal BF; rarer is boosted, more common damped.
+  /** Base frequency for TF adjustments: the TF-attach miss default, so a
+    * token at the base frequency gets exactly the level's nominal BF; rarer
+    * is boosted, more common damped.
     */
-  val DefaultTfBase: Double = 5e-5
+  val DefaultTfBase: Double = Signatures.DefaultRelFreq
 
   /** Apply a score model to a blocked-pairs DataFrame (columns suffixed
-    * _l/_r). Adds per-comparison bf_* and gamma_* columns plus
-    * match_weight / match_probability.
+    * _l/_r). Adds per-comparison bf_* columns plus match_weight /
+    * match_probability.
     */
-  def score(pairs: DataFrame, model: ScoreModel, keepGammas: Boolean = false): DataFrame = {
+  def score(pairs: DataFrame, model: ScoreModel): DataFrame = {
     val withBf = model.comparisons.foldLeft(pairs) { (df, cmp) =>
-      val base = df.withColumn(s"bf_${cmp.name}", cmp.bfColumn)
-      if (keepGammas) base.withColumn(s"gamma_${cmp.name}", cmp.gammaColumn) else base
+      df.withColumn(s"bf_${cmp.name}", cmp.bfColumn)
     }
     val weight = model.comparisons
       .map(c => log2(col(s"bf_${c.name}")))
@@ -124,10 +113,13 @@ object Scoring {
   /** Banded Bayes factor from a TF product via log10 banding: one
     * element_at over a literal ladder instead of a 35-branch CASE
     * (codegen-friendlier; same semantics as splink_model.json:327-618).
-    * Band i covers product < 10^(i - offset).
+    * Band i covers products in [10^(i + minExp - 1), 10^(i + minExp)),
+    * clamped to the ladder's two ends.
     */
-  def bandedTfBf(product: Column, maxExp: Int = 4, minExp: Int = -29): Column = {
-    // BF ladder mirrors the reference's 2^(k/2)-ish decay: bf = 2^(-(exp)/1)
+  def bandedTfBf(product: Column): Column = {
+    val maxExp = 4
+    val minExp = -29
+    // BF ladder mirrors the reference's 2^(k/2)-ish decay: bf = 2^(-exp/2)
     // with exp from minExp..maxExp; values from splink_model.json levels.
     val bfs = (minExp to maxExp).map(e => math.pow(2.0, -e / 2.0))
     val idx = greatest(lit(0),
@@ -136,18 +128,17 @@ object Scoring {
     element_at(array(bfs.map(lit(_)): _*), idx + 1)
   }
 
-  /** Default model over the signature-pair columns produced by
-    * Blocking.candidatePairs* with carryCols from Signatures.signatures +
-    * attachTf.
+  /** Default model over the signature-pair columns that
+    * Pipeline.attachScoreCols joins onto blocked pairs (from
+    * Signatures.signatures + attachTf).
     *
     * @param meanJw the mean-turn-JW column the turn_jw cascade thresholds
-    *   read. The default re-derives the full 3-alignment JW sweep inline;
-    *   scoreDefault passes a pre-projected column instead — CASE WHEN
-    *   branch conditions are conditionally evaluated, so codegen
-    *   subexpression elimination cannot share the sweep across the three
-    *   threshold tests and the inline form pays it up to 3x per pair.
+    *   read: scoreDefault passes a pre-projected column. Inlining
+    *   meanTurnJw here would cost up to 3x per pair — CASE WHEN branch
+    *   conditions are conditionally evaluated, so codegen subexpression
+    *   elimination cannot share the sweep across the three threshold tests.
     */
-  def defaultModel(prior: Double = 1e-6, meanJw: Column = meanTurnJw): ScoreModel = {
+  private def defaultModel(prior: Double, meanJw: Column): ScoreModel = {
     def c(n: String) = col(n + "_l") -> col(n + "_r")
 
     val exactText = Comparison("sig_text",
@@ -290,10 +281,10 @@ object Scoring {
 
   private def jwCol(a: Column, b: Column): Column = jaroWinkler(a, b)
 
-  /** Score with the default model + the banded TF-product comparison added
-    * when hist maps are present.
+  /** Score with the default model + the banded TF-product comparison
+    * (neutral when either side has no hist map).
     */
-  def scoreDefault(pairs: DataFrame, prior: Double = 1e-6, useTfProduct: Boolean = true): DataFrame = {
+  def scoreDefault(pairs: DataFrame, prior: Double): DataFrame = {
     // Project the 3-alignment JW sweep ONCE per pair. As its own non-cheap
     // alias referenced 3x downstream, CollapseProject keeps the projection
     // separate, guaranteeing single evaluation; inline it was evaluated per
@@ -303,16 +294,13 @@ object Scoring {
     val withJw = pairs.withColumn("__mean_turn_jw", meanTurnJw)
     val base = score(withJw, defaultModel(prior, meanJw = col("__mean_turn_jw")))
       .drop("__mean_turn_jw")
-    if (!useTfProduct) base
-    else {
-      val prod = tfProduct(col("token_freq_hist_l"), col("token_freq_hist_r"))
-      val bf = when(col("token_freq_hist_l").isNull || col("token_freq_hist_r").isNull, lit(1.0))
-        .otherwise(bandedTfBf(prod))
-      base
-        .withColumn("bf_token_tf_product", bf)
-        .withColumn("match_weight", col("match_weight") + log2(col("bf_token_tf_product")))
-        .withColumn("match_probability",
-          pow(lit(2.0), col("match_weight")) / (lit(1.0) + pow(lit(2.0), col("match_weight"))))
-    }
+    val prod = tfProduct(col("token_freq_hist_l"), col("token_freq_hist_r"))
+    val bf = when(col("token_freq_hist_l").isNull || col("token_freq_hist_r").isNull, lit(1.0))
+      .otherwise(bandedTfBf(prod))
+    base
+      .withColumn("bf_token_tf_product", bf)
+      .withColumn("match_weight", col("match_weight") + log2(col("bf_token_tf_product")))
+      .withColumn("match_probability",
+        pow(lit(2.0), col("match_weight")) / (lit(1.0) + pow(lit(2.0), col("match_weight"))))
   }
 }

@@ -41,7 +41,6 @@ object Signatures {
       col("conv_id"),
       size(col("ts_sorted")).as("n_turns"),
       transform(col("ts_sorted"), t => normText(t.getField("text"))).as("turn_texts"),
-      transform(col("ts_sorted"), t => t.getField("role")).as("roles"),
       concat_ws("", transform(col("ts_sorted"),
         t => upper(substring(t.getField("role"), 1, 1)))).as("role_seq"))
   }
@@ -150,23 +149,20 @@ object Signatures {
       .select(col("token"), (col("cnt") / col("__total")).as("rel_freq"))
   }
 
-  /** Attach TF features: token->rel_freq map, salient (rarest) tokens 1..3,
-    * and frequency-banded unusual-token arrays (reference:
-    * term_frequencies.py:264-307 bands at 1e-4 / 5e-5 / 1e-7, retuned as
-    * corpus-relative quantile-ish thresholds configurable by caller).
-    *
-    * The TF table is broadcast when small (reference TF ~300k rows); at
-    * 100 TB the TF table itself stays small (vocabulary-sized), so
-    * broadcast is the scale-correct default.
+  /** Upper rel_freq bounds of the two unusual-token bands the score model
+    * reads (reference: term_frequencies.py:264-307 bands at
+    * 1e-4 / 5e-5 / 1e-7, retuned for a corpus-relative rel_freq).
     */
-  def attachTf(
-      sigs: DataFrame,
-      tf: DataFrame,
-      unusualMax: Double = 1e-3,
-      veryUnusualMax: Double = 1e-4,
-      extremelyUnusualMax: Double = 1e-5,
-      broadcastTf: Boolean = true): DataFrame = {
-    val tfSide = if (broadcastTf) broadcast(tf) else tf
+  private val VeryUnusualMax = 1e-4
+  private val ExtremelyUnusualMax = 1e-5
+
+  /** Attach TF features: token->rel_freq map, salient (rarest) tokens 1..3,
+    * and the very / extremely unusual-token arrays.
+    *
+    * The TF table is always broadcast: it is vocabulary-sized (reference
+    * TF ~300k rows), not corpus-sized.
+    */
+  def attachTf(sigs: DataFrame, tf: DataFrame): DataFrame = {
     // Aggregate at (conv, token) level first: counts are map-side
     // combinable and the downstream per-conversation array is one entry per
     // DISTINCT token — every derived feature (hist map, rarity bands,
@@ -176,7 +172,7 @@ object Signatures {
     // shuffle-light equivalent.
     val perToken = sigs
       .select(col("conv_id"), explode(col("tokens")).as("token"))
-      .join(tfSide, Seq("token"), "left")
+      .join(broadcast(tf), Seq("token"), "left")
       .withColumn("rel_freq", coalesce(col("rel_freq"), lit(DefaultRelFreq)))
       .groupBy(col("conv_id"), col("token"))
       .agg(count(lit(1)).cast("int").as("cnt"), first(col("rel_freq")).as("rel_freq"))
@@ -201,9 +197,8 @@ object Signatures {
           struct(x.getField("token").as("key"),
             struct(x.getField("cnt").as("cnt"),
               x.getField("rel_freq").as("rel_freq")).as("value")))))
-      .withColumn("unusual_tokens", bandTokens(veryUnusualMax, unusualMax))
-      .withColumn("very_unusual_tokens", bandTokens(extremelyUnusualMax, veryUnusualMax))
-      .withColumn("extremely_unusual_tokens", bandTokens(0.0, extremelyUnusualMax))
+      .withColumn("very_unusual_tokens", bandTokens(ExtremelyUnusualMax, VeryUnusualMax))
+      .withColumn("extremely_unusual_tokens", bandTokens(0.0, ExtremelyUnusualMax))
       // salient tokens = 3 rarest distinct tokens (numeric_token_1..3 analogue)
       .withColumn("salient_token_1",
         try_element_at(col("tf_arr"), lit(1)).getField("token"))

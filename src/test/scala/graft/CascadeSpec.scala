@@ -86,7 +86,7 @@ class CascadeSpec extends AnyFunSuite {
       // ambiguous subtree and must NOT fall back to a shallower unique one
       ("f2", "DISABLE EVERYTHING THANKS GOODBYE", "B1"),
       // deepest match is the 1-token suffix "KERNEL" (unique to c5) ->
-      // below minDepth=2, rejected
+      // below SuffixMinDepth = 2, rejected
       ("f3", "UNRELATED WORDS KERNEL", "B1")
     ).toDF("conv_id", "sig_text", "block_key")
 
@@ -97,7 +97,7 @@ class CascadeSpec extends AnyFunSuite {
     assert(got.get("f1").map(_._1) === Some("c1"))
     assert(got("f1")._2 === 7L)
     assert(!got.contains("f2"), s"ambiguous deepest suffix must not match: $got")
-    assert(!got.contains("f3"), s"minDepth gate must reject 1-token suffixes: $got")
+    assert(!got.contains("f3"), s"SuffixMinDepth gate must reject 1-token suffixes: $got")
 
     // wired as cascade stage 3: stages 1-2 miss f1 (no exact text, no
     // unique 5-gram hit at minHits=3 in this tiny corpus is possible — so

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.score.Scoring
+import ScoringGoldenSpec.Side
 
 /** Golden values for `Scoring.scoreDefault` on four fixed pairs: every
   * Bayes-factor column, match_weight and match_probability are pinned to
@@ -32,16 +33,6 @@ class ScoringGoldenSpec extends AnyFunSuite {
     s <- Seq("_l", "_r"); (n, t) <- sideFields
   } yield StructField(n + s, t))
 
-  private final case class Side(
-      id: String, sigText: String, turns: Seq[String], roleSeq: String,
-      salient: (String, String, String), hist: Map[String, (Int, Double)],
-      very: Seq[String], extremely: Seq[String], nTurns: Integer,
-      numeric: (String, String)) {
-    def values: Seq[Any] = Seq(id, sigText, turns, roleSeq, salient._1, salient._2,
-      salient._3, Option(hist).map(_.map { case (k, (c, f)) => k -> Row(c, f) }).orNull,
-      very, extremely, nTurns, numeric._1, numeric._2)
-  }
-
   private val turnsA = Seq("HELLO I NEED HELP WITH ORDER 4471", "SURE WHAT IS THE ISSUE",
     "IT ARRIVED DAMAGED")
   private val fullA = Side("a1", turnsA.mkString(" "), turnsA, "UAU",
@@ -53,8 +44,7 @@ class ScoringGoldenSpec extends AnyFunSuite {
     null, null, null, (null, null))
 
   private val pairs: Seq[(String, (Side, Side))] = Seq(
-    // no TF hist on either side: the TF-product level is neutral and the
-    // hist-keyed salient/numeric TF adjustments fall back to the base
+    // no TF hist on either side: the TF-product level is neutral (BF 1)
     "both_hists_null" -> (
       Side("b1", "GOOD MORNING", Seq("GOOD MORNING"), "U", ("MORNING", "GOOD", null),
         null, Nil, Nil, 1, (null, null)),
@@ -114,5 +104,18 @@ class ScoringGoldenSpec extends AnyFunSuite {
     assert(byName.forall { case (n, _) => golden(n).length == outCols.length },
       "golden table incomplete")
     assert(mismatches.isEmpty, mismatches.mkString("; "))
+  }
+}
+
+object ScoringGoldenSpec {
+  /** One side of a pair, in `sideFields` order. */
+  final case class Side(
+      id: String, sigText: String, turns: Seq[String], roleSeq: String,
+      salient: (String, String, String), hist: Map[String, (Int, Double)],
+      very: Seq[String], extremely: Seq[String], nTurns: Integer,
+      numeric: (String, String)) {
+    def values: Seq[Any] = Seq(id, sigText, turns, roleSeq, salient._1, salient._2,
+      salient._3, Option(hist).map(_.map { case (k, (c, f)) => k -> Row(c, f) }).orNull,
+      very, extremely, nTurns, numeric._1, numeric._2)
   }
 }
